@@ -7,23 +7,37 @@ The same ``Changeset`` records feed ``Model``, which answers every
 ``load_query`` read query and gives the last-write-wins (LWW) final state of
 a replication drain without Spark.
 
-Traffic dimensions (all stated here, all driven by ``random.Random(seed)``):
+Traffic dimensions, all driven by ``random.Random(seed)``.  The shares
+follow the repository's ``FIXTURES.md`` (section A1/A2, the changeset and
+comment tables) where it gives one; every other number is an assumption of
+this benchmark, marked "assumed" where it is set, not a measurement of OSM
+traffic:
 
-* users are Zipf-skewed (``ZIPF_S``) over ``N_USERS``; ``ANON_SHARE`` of the
-  changesets are anonymous (no uid/user attributes);
+* users are Zipf-skewed over ``n / CHANGESETS_PER_USER`` users (FIXTURES:
+  "Zipf over ~N/50 users"; the exponent ``ZIPF_S`` is assumed);
+  ``ANON_SHARE`` of the changesets are anonymous (FIXTURES: ~5%);
 * ``created_at`` is spread over the dump's days, ids increase with time;
-* 0-6 tags per changeset from ``TAG_KEYS`` (count distribution
-  ``TAG_COUNT_WEIGHTS``), ``created_by`` drawn from ``EDITORS``;
-* ``OPEN_SHARE`` open (no closed_at), ``NO_BBOX_SHARE`` bbox-less,
-  ``DISCUSSION_SHARE`` with 1-3 discussion comments;
+* ``OPEN_SHARE`` open (FIXTURES: ~2%), ``NO_BBOX_SHARE`` bbox-less
+  (FIXTURES: ~3%), a few bboxes past the pole, tiny to continent-sized;
+* tags: each key of ``TAG_KEYS`` (the FIXTURES vocabulary) is present
+  independently with its share, so a changeset has 0-6 tags; FIXTURES gives
+  ``created_by`` ~80% and ``comment`` ~40%, the other shares are assumed.
+  ``created_by`` values are drawn from ``EDITORS`` (assumed shares);
+* ``num_changes`` is log-normal clipped to 1..10000 (FIXTURES; the
+  parameters are assumed);
+* ``DISCUSSION_SHARE`` of the changesets have 1-5 discussion comments
+  (FIXTURES: ~10%), each by a named user, dated after the changeset;
 * ``n_malformed`` elements carry a non-numeric id; the engine quarantines
   them as rows with a NULL id, and the model keeps them the same way.
 
-Diffs hold ``DIFF_SIZE`` elements: ``DIFF_NEW_SHARE`` new changesets, the
-rest updates of existing ones (closing, more changes, a new comment).  The
-update-age mix ``UPDATE_AGE_MIX`` says how old the updated changesets are:
-created within the last day, within two weeks, or any age.  One id appears
-at most once per diff, so LWW order is the diff sequence.
+Diffs hold ``DIFF_SIZE`` elements: ``DIFF_NEW`` new changesets, the rest
+updates of existing ones (closing, more changes, sometimes a new comment or
+a comment tag).  The update-age mix ``DIFF_UPDATES`` says how many of the
+updated changesets were created within the last day, within two weeks, or
+at any age.  The diff shape follows the benchmark's definition
+("mostly new changesets; updates mostly of the last day, a small share of
+old ones"); the exact numbers are assumed.  One id appears at most once
+per diff, so LWW order is the diff sequence.
 """
 
 from __future__ import annotations
@@ -39,42 +53,44 @@ from decimal import Decimal
 from itertools import accumulate
 from xml.sax.saxutils import escape, quoteattr
 
-N_USERS = 3000
-ZIPF_S = 1.1
-ANON_SHARE = 0.01
-OPEN_SHARE = 0.03
-NO_BBOX_SHARE = 0.05
-DISCUSSION_SHARE = 0.05
-TAG_COUNT_WEIGHTS = [0.03, 0.07, 0.15, 0.25, 0.25, 0.15, 0.10]  # 0..6 tags
-# key -> relative pick weight (Efraimidis-Spirakis weighted sample)
+CHANGESETS_PER_USER = 50  # FIXTURES.md
+ZIPF_S = 1.0  # assumed
+ANON_SHARE = 0.05  # FIXTURES.md
+OPEN_SHARE = 0.02  # FIXTURES.md
+NO_BBOX_SHARE = 0.03  # FIXTURES.md
+DISCUSSION_SHARE = 0.10  # FIXTURES.md, with 1-5 comments
+# key -> share of changesets carrying it (FIXTURES.md vocabulary; the
+# created_by and comment shares are FIXTURES.md's, the rest assumed)
 TAG_KEYS = {
-    "created_by": 40.0,
-    "comment": 30.0,
-    "source": 6.0,
-    "imagery_used": 5.0,
-    "hashtags": 3.0,
-    "locale": 4.0,
-    "host": 4.0,
-    "changesets_count": 3.0,
-    "review_requested": 1.0,
+    "created_by": 0.80,
+    "comment": 0.40,
+    "source": 0.30,
+    "imagery_used": 0.30,
+    "locale": 0.25,
+    "bot": 0.02,
 }
+# created_by values: FIXTURES.md's JOSM / iD / Potlatch prefixes plus two
+# mobile editors; shares assumed
 EDITORS = [
     ("JOSM/1.5 (19017 en)", 0.35),
     ("iD 2.30.4", 0.45),
-    ("StreetComplete 58.1", 0.08),
+    ("StreetComplete 58.1", 0.10),
     ("Vespucci 20.0.4.0", 0.05),
-    ("Every Door 5.1", 0.05),
-    ("Potlatch 3.0", 0.02),
+    ("Potlatch 2", 0.05),
 ]
+NUM_CHANGES_LOGNORMAL = (2.5, 1.5)  # mu, sigma of ln(num_changes); assumed
 WORDS = (
     "fix add update road building name path river bridge school park "
     "footway survey import tidy remove bus stop shop address landuse"
 ).split()
 
-DIFF_SIZE = 100
-DIFF_NEW_SHARE = 0.6
-# (share, max age in days or None for any age) of the updated changesets
-UPDATE_AGE_MIX = [(0.90, 1.0), (0.07, 14.0), (0.03, None)]
+DIFF_NEW = 60  # new changesets per diff; assumed
+DIFF_NEW_OPEN_SHARE = 0.7  # new changesets still open at diff time; assumed
+# updates per diff by the age of the updated changeset: (count, max age in
+# days, or None for any age).  Fixed counts, not shares, so every diff
+# touches old partitions alike; assumed
+DIFF_UPDATES = [(36, 1.0), (3, 14.0), (1, None)]
+DIFF_SIZE = DIFF_NEW + sum(n for n, _ in DIFF_UPDATES)
 
 AREA_LIMIT_M2 = 225_000_000.0  # the reference's 225 km2 equal-area filter
 EASE_GRID_RADIUS_M = 6371228.0  # EPSG:3410 authalic sphere (geometry.py)
@@ -115,12 +131,9 @@ class Generator:
         self.start = start
         self.days = days
         self.now = start + dt.timedelta(days=days)
-        uids = self.rng.sample(range(1, 20_000_000), N_USERS)
-        self.users = [(u, f"mapper_{u}") for u in uids]
-        w = [1.0 / (r + 1) ** ZIPF_S for r in range(N_USERS)]
-        self._user_cum = list(accumulate(w))
+        self.users: list[tuple[int, str]] = []
+        self._user_cum: list[float] = []
         self._editor_cum = list(accumulate(p for _, p in EDITORS))
-        self._tag_count_cum = list(accumulate(TAG_COUNT_WEIGHTS))
         self.next_id = 1_000_000
         self.rows: list[Changeset] = []  # well-formed rows, created_at order
 
@@ -130,21 +143,23 @@ class Generator:
         r = (rng or self.rng).random() * self._user_cum[-1]
         return self.users[bisect.bisect_left(self._user_cum, r)]
 
+    def _set_users(self, n: int) -> None:
+        count = max(1, n // CHANGESETS_PER_USER)
+        uids = self.rng.sample(range(1, 20_000_000), count)
+        self.users = [(u, f"mapper_{u}") for u in uids]
+        self._user_cum = list(accumulate(1.0 / (r + 1) ** ZIPF_S for r in range(count)))
+
     def _tags(self) -> dict[str, str]:
-        n = _pick(self.rng, self._tag_count_cum)
-        keys = sorted(
-            TAG_KEYS, key=lambda k: self.rng.random() ** (1.0 / TAG_KEYS[k])
-        )[::-1][:n]
         tags = {}
-        for k in keys:
+        for k, share in TAG_KEYS.items():
+            if self.rng.random() >= share:
+                continue
             if k == "created_by":
                 tags[k] = EDITORS[_pick(self.rng, self._editor_cum)][0]
             elif k == "comment":
                 tags[k] = " ".join(self.rng.choices(WORDS, k=self.rng.randint(1, 6)))
-            elif k == "changesets_count":
-                tags[k] = str(self.rng.randint(1, 50_000))
-            elif k == "hashtags":
-                tags[k] = "#" + self.rng.choice(WORDS)
+            elif k == "bot":
+                tags[k] = "yes"
             else:
                 tags[k] = self.rng.choice(WORDS)
         return tags
@@ -155,15 +170,16 @@ class Generator:
         while True:
             lat = self.rng.uniform(-60.0, 72.0)
             lon = self.rng.uniform(-179.0, 170.0)
-            dlat = 10 ** self.rng.uniform(-4.0, 0.7)
-            dlon = 10 ** self.rng.uniform(-4.0, 0.9)
+            # extents from a few metres to continent-sized (assumed)
+            dlat = 10 ** self.rng.uniform(-4.0, 1.2)
+            dlon = 10 ** self.rng.uniform(-4.0, 1.4)
             box = (
                 round(lat * SCALE),
                 round((lat + dlat) * SCALE),
                 round(lon * SCALE),
                 round((lon + dlon) * SCALE),
             )
-            if self.rng.random() < 0.002:  # OSM bboxes can overshoot the pole
+            if self.rng.random() < 0.002:  # past the pole (FIXTURES.md)
                 box = (box[0], round(90.4 * SCALE), box[2], box[3])
             # stay clear of the area threshold so float rounding in either
             # engine can never flip a row across it
@@ -172,11 +188,8 @@ class Generator:
 
     def _comments(self, after: dt.datetime) -> list:
         out = []
-        for _ in range(self.rng.randint(1, 3)):
-            if self.rng.random() < ANON_SHARE:
-                uid, name = None, None
-            else:
-                uid, name = self.user()
+        for _ in range(self.rng.randint(1, 5)):
+            uid, name = self.user()
             after = after + dt.timedelta(seconds=self.rng.randint(60, 86_400))
             text = " ".join(self.rng.choices(WORDS, k=self.rng.randint(2, 8)))
             out.append((uid, name, after, text))
@@ -201,7 +214,9 @@ class Generator:
             closed_at=closed,
             open=is_open,
             bbox=self._bbox(),
-            num_changes=min(10_000, int(self.rng.paretovariate(0.9))),
+            num_changes=max(
+                1, min(10_000, round(self.rng.lognormvariate(*NUM_CHANGES_LOGNORMAL)))
+            ),
             tags=self._tags(),
         )
         if self.rng.random() < DISCUSSION_SHARE:
@@ -212,6 +227,7 @@ class Generator:
     def dump(self, n: int, n_malformed: int = 0) -> list[Changeset]:
         """``n`` well-formed changesets over ``days`` (plus ``n_malformed``
         quarantine-bait elements at seeded positions), created_at order."""
+        self._set_users(n)
         span = self.days * 86_400
         offs = sorted(self.rng.randrange(int(span)) for _ in range(n))
         rows = [
@@ -231,13 +247,7 @@ class Generator:
         return out
 
     # -- replication diffs -------------------------------------------------
-    def _pick_update(self, taken: set) -> int | None:
-        r = self.rng.random()
-        acc = 0.0
-        for share, max_age in UPDATE_AGE_MIX:
-            acc += share
-            if r < acc:
-                break
+    def _pick_update(self, max_age: float | None, taken: set) -> int | None:
         if max_age is None:
             lo = 0
         else:
@@ -253,33 +263,34 @@ class Generator:
         """One minutely diff: new changesets created this minute plus full-
         state updates of existing ones (LWW replaces the whole row)."""
         self.now += dt.timedelta(minutes=1)
-        n_new = round(DIFF_SIZE * DIFF_NEW_SHARE)
+        n_new = DIFF_NEW
         out: list[Changeset] = []
         taken: set[int] = set()
-        for _ in range(DIFF_SIZE - n_new):
-            i = self._pick_update(taken)
-            if i is None:
-                continue
-            old = self.rows[i]
-            taken.add(old.id)
-            upd = replace(
-                old,
-                num_changes=min(10_000, old.num_changes + self.rng.randint(1, 200)),
-                open=False,
-                closed_at=old.closed_at or self.now,
-                tags=dict(old.tags),
-                comments=list(old.comments),
-            )
-            if self.rng.random() < 0.2:
-                since = max(old.created_at, self.now - dt.timedelta(days=1))
-                upd.comments.append(self._comments(since)[0])
-            if self.rng.random() < 0.1 and len(upd.tags) < 6:
-                upd.tags["review_requested"] = "yes"
-            self.rows[i] = upd
-            out.append(upd)
+        for count, max_age in DIFF_UPDATES:
+            for _ in range(count):
+                i = self._pick_update(max_age, taken)
+                if i is None:
+                    continue
+                old = self.rows[i]
+                taken.add(old.id)
+                upd = replace(
+                    old,
+                    num_changes=min(10_000, old.num_changes + self.rng.randint(1, 200)),
+                    open=False,
+                    closed_at=old.closed_at or self.now,
+                    tags=dict(old.tags),
+                    comments=list(old.comments),
+                )
+                if self.rng.random() < 0.2:
+                    since = max(old.created_at, self.now - dt.timedelta(days=1))
+                    upd.comments.append(self._comments(since)[0])
+                if self.rng.random() < 0.1:
+                    upd.tags["comment"] = " ".join(self.rng.choices(WORDS, k=3))
+                self.rows[i] = upd
+                out.append(upd)
         for k in range(n_new):
             created = self.now - dt.timedelta(seconds=59 - k * 59 // n_new)
-            out.append(self.new_changeset(created, 0.7))
+            out.append(self.new_changeset(created, DIFF_NEW_OPEN_SHARE))
         # new rows are the latest, so created_at order (the age bisect) holds
         self.rows.extend(out[len(taken):])
         return out
@@ -411,10 +422,12 @@ def write_base_parquet(path: str, rows: list[Changeset], sequence: int) -> None:
 
 def area_m2(box: tuple[int, int, int, int]) -> float:
     """``geometry.bbox_area_m2`` in Python floats (EPSG:3410 equal area)."""
-    min_lat, max_lat, min_lon, max_lon = (float(Decimal(v).scaleb(-7)) for v in box)
+    # int / int is correctly rounded, so each value is the double nearest
+    # the decimal(10,7) one, as Spark's cast to double gives it
+    min_lat, max_lat = box[0] / SCALE, box[1] / SCALE
     lat1 = math.radians(max(-90.0, min(90.0, min_lat)))
     lat2 = math.radians(max(-90.0, min(90.0, max_lat)))
-    dlon = math.radians(float(Decimal(box[3] - box[2]).scaleb(-7)))
+    dlon = math.radians((box[3] - box[2]) / SCALE)
     r = EASE_GRID_RADIUS_M
     return r * r * abs(dlon) * abs(math.sin(lat2) - math.sin(lat1))
 
@@ -475,7 +488,7 @@ class Model:
             self._memo[key] = getattr(self, "_q_" + kind)(*params)
         return self._memo[key]
 
-    # one method per read query kind (see workloads.READ_QUERIES)
+    # one method per read query kind (see workloads.READ_MIX)
     def _q_comment_count(self):
         return sum(1 for c in self.rows() if "comment" in c.tags)
 

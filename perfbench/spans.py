@@ -111,11 +111,14 @@ def read_event_log(log_dir: str) -> dict:
     jobs: dict[int, dict] = {}
     stage_job: dict[int, int] = {}
     stages: dict[int, dict] = defaultdict(lambda: defaultdict(float))
-    # Spark 4 writes a v2 log directory of numbered ``events_<n>_*`` files
+    # Spark 4 writes a rolling log directory of numbered ``events_<n>_*``
+    # files (spark.eventLog.rolling.enabled defaults to true)
     files = sorted(
         glob.glob(os.path.join(log_dir, "**", "events_*"), recursive=True),
         key=lambda p: int(os.path.basename(p).split("_")[1]),
-    ) or [p for p in glob.glob(os.path.join(log_dir, "*")) if os.path.isfile(p)]
+    )
+    if not files:
+        raise FileNotFoundError(f"no events_* files under {log_dir}")
     for path in files:
         with open(path) as fh:
             for line in fh:

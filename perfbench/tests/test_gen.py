@@ -51,11 +51,20 @@ def test_dump_traffic_dimensions():
     assert [c.created_at for c in good] == sorted(c.created_at for c in good)
     assert len({c.created_date for c in good}) == 10
     assert all(0 <= len(c.tags) <= 6 for c in good)
-    anon = sum(c.user_id is None for c in good) / len(good)
-    no_bbox = sum(c.bbox is None for c in good) / len(good)
-    is_open = sum(c.open for c in good) / len(good)
-    assert 0.002 < anon < 0.03 and 0.03 < no_bbox < 0.08 and 0.01 < is_open < 0.06
+    def share(pred):
+        return sum(1 for c in good if pred(c)) / len(good)
+
+    # the FIXTURES.md shares, within sampling noise at n = 5000
+    assert 0.04 < share(lambda c: c.user_id is None) < 0.06
+    assert 0.02 < share(lambda c: c.bbox is None) < 0.04
+    assert 0.01 < share(lambda c: c.open) < 0.03
+    assert 0.08 < share(lambda c: c.comments) < 0.12
+    assert 0.77 < share(lambda c: "created_by" in c.tags) < 0.83
+    assert 0.37 < share(lambda c: "comment" in c.tags) < 0.43
+    assert all(1 <= len(c.comments) <= 5 for c in good if c.comments)
+    assert all(1 <= c.num_changes <= 10_000 for c in good)
     assert all((c.closed_at is None) == c.open for c in good)
+    assert len(g.users) == 5000 // gen.CHANGESETS_PER_USER
     # Zipf: the most active user makes far more changesets than the median
     counts = {}
     for c in good:
@@ -71,9 +80,12 @@ def test_diff_mix():
     ids = [c.id for c in diff]
     assert len(ids) == len(set(ids))  # one element per id: LWW order is the sequence
     updates = [c for c in diff if c.id in dump_ids]
-    assert len(diff) - len(updates) == round(gen.DIFF_SIZE * gen.DIFF_NEW_SHARE)
-    recent = sum(g.now - c.created_at <= dt.timedelta(days=1) for c in updates)
-    assert recent >= len(updates) // 2  # most updates hit the last day
+    assert len(diff) - len(updates) == gen.DIFF_NEW
+    assert len(updates) == gen.DIFF_SIZE - gen.DIFF_NEW
+    ages = [g.now - c.created_at for c in updates]
+    for count, max_age in gen.DIFF_UPDATES:
+        if max_age is not None:  # at least the stated count is that young
+            assert sum(a <= dt.timedelta(days=max_age) for a in ages) >= count
 
 
 def _cs(cid, uid, day, tags, bbox=None, n=1, comments=()):

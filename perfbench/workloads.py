@@ -1,14 +1,16 @@
 """The benchmark's workloads.  Each drives the engine only through its
-public functions, measures for ``ctx.seconds`` and checks every answer
+public functions, does a fixed amount of measured work (plus a closed-loop
+read mix of ``ctx.seconds`` in ``load_query``) and checks every answer
 against ``gen.Model``.
 
-``load_query``: dump -> ``ChangesetStore.bulk_load`` (repeated into fresh
-stores), K diffs at a time -> ``ChangesetStore.replicate``, then a
-closed-loop, single-client read mix over one ``store.changesets()`` frame.
+``load_query``: after a cold round in set-up, ``ROUNDS`` rounds of dump ->
+``ChangesetStore.bulk_load`` into a fresh store, K diffs ->
+``ChangesetStore.replicate`` of the main store, and a closed-loop,
+single-client read mix over the re-opened main store.
 
-``replicate``: a base ``TxnTable`` and warm-up diffs in set-up, then D
-diffs drained through ``run_replication_stream_txn`` one diff per trigger,
-with compaction every ``COMPACT_EVERY`` triggers.
+``replicate``: a base ``TxnTable`` and a warm-up diff in set-up, then
+``DRAIN_DIFFS`` diffs drained through ``run_replication_stream_txn``, one
+diff per trigger, with compaction every ``COMPACT_EVERY`` triggers.
 """
 
 from __future__ import annotations
@@ -34,21 +36,19 @@ from gen import (
 START = dt.datetime(2025, 1, 1)
 
 # load_query sizes
-DUMP_CHANGESETS = 12_000
+DUMP_CHANGESETS = 10_000
 DUMP_DAYS = 30
 MALFORMED = 5
-CATCHUP_DIFFS = 5  # K diffs per catch-up
-WARM_LOADS = 2  # measured bulk_loads after the cold round
-CATCHUPS = 2  # measured catch-ups after the cold round
-READ_WARMUP = 20  # unsampled queries before the read latencies
+CATCHUP_DIFFS = 2  # K diffs per catch-up
+ROUNDS = 4  # measured rounds, each one bulk_load, one catch-up and reads
 MIN_QUERIES = 100  # sampled queries: p90 with at least 10 samples beyond it
 
 # replicate sizes
-BASE_CHANGESETS = 15_000
+BASE_CHANGESETS = 100_000
 BASE_DAYS = 90
-WARMUP_DIFFS = 2  # the cold first trigger and one more
+WARMUP_DIFFS = 1  # the cold first trigger
 COMPACT_EVERY = 3
-MAX_DIFFS = 30
+DRAIN_DIFFS = 6  # measured triggers: two compactions
 
 # read mix: kind -> share of the queries issued
 READ_MIX = {
@@ -61,6 +61,8 @@ READ_MIX = {
     "top_users": 1,
     "comment_join": 1,
 }
+# unsampled queries before the read latencies: one pass over the mix
+READ_WARMUP = sum(READ_MIX.values())
 
 
 def _p(values, q):
@@ -123,11 +125,13 @@ def _set_group(ctx, group: str) -> None:
 
 def _query_instances(seed: int, gen: Generator, n: int) -> list[tuple[str, tuple]]:
     rng = random.Random(seed * 7919 + 1)
+    # the kinds cycle in a fixed order, so every run issues the same mix and
+    # only the parameters depend on the seed
     kinds = [k for k, w in READ_MIX.items() for _ in range(w)]
     first = START.date()
     out = []
     for i in range(n):
-        kind = kinds[i % len(kinds)] if i < len(kinds) else rng.choice(kinds)
+        kind = kinds[i % len(kinds)]
         d1 = first + dt.timedelta(days=rng.randrange(DUMP_DAYS))
         if kind == "envelope_count":
             lon = rng.randrange(-360, 340) / 2
@@ -223,29 +227,23 @@ def load_query(ctx) -> dict:
     write_osm(dump_path, dump)
     diff_dir = os.path.join(work, "diffs")
     os.makedirs(diff_dir)
-    model = Model(dump)
     start_seq = 5_000_000
-    diff_bytes = []  # gzipped bytes per diff
-    for i in range(1, CATCHUP_DIFFS * CATCHUPS + 1):
-        diff = gen.next_diff()
-        diff_bytes.append(
-            write_osm(os.path.join(diff_dir, f"{start_seq + i:09d}.osm.gz"), diff)
-        )
-        model.apply(diff)
+    diffs = [gen.next_diff() for _ in range(CATCHUP_DIFFS * (ROUNDS + 1))]
+    diff_bytes = [  # gzipped bytes per diff
+        write_osm(os.path.join(diff_dir, f"{start_seq + i:09d}.osm.gz"), diff)
+        for i, diff in enumerate(diffs, 1)
+    ]
+    model = Model(dump)  # follows the main store, catch-up by catch-up
 
     def fetcher(seq: int) -> str:
         return os.path.join(diff_dir, f"{seq:09d}.osm.gz")
 
     queries = _query_instances(ctx.seed, gen, 5000)
     ctx.log("inputs written")
-    stores: list[str] = []
     written: list[tuple[int, int]] = []  # (parquet files, bytes) per traced load
 
-    def fresh_load(tag: str):
-        for old in stores:
-            shutil.rmtree(old, ignore_errors=True)
-        stores[:] = [os.path.join(work, f"store-{tag}")]
-        store = ChangesetStore(ctx.spark, stores[0])
+    def load(tag: str):
+        store = ChangesetStore(ctx.spark, os.path.join(work, f"store-{tag}"))
         store.create()
         _set_group(ctx, f"load_query:bulk_load:{tag}")
         t0 = time.perf_counter()
@@ -256,16 +254,21 @@ def load_query(ctx) -> dict:
             written.append((_parquet_files(store.table_dir), _dir_bytes(store.table_dir)))
         return store, dt_s
 
-    def catch_up(store, k: int, tag: str):
+    def drop(store) -> None:
+        shutil.rmtree(store.root, ignore_errors=True)
+
+    def catch_up(store, k: int):
         """Apply diffs (k-1)*K+1 .. k*K; returns seconds and layer counts."""
         layer = {}
         if tr is not None:
             before = _partition_inodes(store.table_dir)
-        _set_group(ctx, f"load_query:replicate:{tag}")
+        _set_group(ctx, f"load_query:replicate:{k}")
         t0 = time.perf_counter()
         applied = store.replicate(start_seq + k * CATCHUP_DIFFS, fetcher)
         dt_s = time.perf_counter() - t0
         ops.check("replicate diffs", applied == CATCHUP_DIFFS, str(applied))
+        for diff in diffs[(k - 1) * CATCHUP_DIFFS : k * CATCHUP_DIFFS]:
+            model.apply(diff)
         if tr is not None:
             after = _partition_inodes(store.table_dir)
             changed = [p for p, ino in after.items() if before.get(p) != ino]
@@ -275,60 +278,65 @@ def load_query(ctx) -> dict:
             ) / sum(diff_bytes[(k - 1) * CATCHUP_DIFFS : k * CATCHUP_DIFFS])
         return dt_s, layer
 
-    def run_query(cs, kind: str, params: tuple):
-        _set_group(ctx, f"load_query:query:{kind}")
-        t0 = time.perf_counter()
-        try:
-            df = read_query(cs, kind, params)
-            with ctx.span("spark.collect"):
-                got = _as_answer(kind, df.collect())
-        except Exception as e:  # noqa: BLE001 — a failed query is a failed op
-            ops.check(f"query {kind}{params}", False, repr(e))
-            return None
-        dt_s = time.perf_counter() - t0
-        want = model.answer(kind, params)
-        ops.check(f"query {kind}{params}", got == want, f"{got!r} != {want!r}")
-        return dt_s, (_plan_s(df) if tr is not None else None)
+    qi = 0
 
-    ctx.ready()
-    ctx.mark_start()
+    def read(cs, n: int, seconds: float = 0.0) -> tuple[list, list]:
+        """Issue the next queries of the closed loop: at least ``n``, and
+        for at least ``seconds`` (never past 3 x ``seconds``); returns
+        their latencies and Catalyst planning times."""
+        nonlocal qi
+        lat, plans = [], []
+        first, t_start = qi, time.perf_counter()
+        while qi - first < n or time.perf_counter() - t_start < seconds:
+            if seconds and time.perf_counter() - t_start > 3 * seconds:
+                break
+            kind, params = queries[qi % len(queries)]
+            qi += 1
+            _set_group(ctx, f"load_query:query:{kind}")
+            t0 = time.perf_counter()
+            try:
+                df = read_query(cs, kind, params)
+                with ctx.span("spark.collect"):
+                    got = _as_answer(kind, df.collect())
+            except Exception as e:  # noqa: BLE001 — a failed query is a failed op
+                ops.check(f"query {kind}{params}", False, repr(e))
+                continue
+            lat.append(time.perf_counter() - t0)
+            plans.append(_plan_s(df) if tr is not None else None)
+            want = model.answer(kind, params)
+            ops.check(f"query {kind}{params}", got == want, f"{got!r} != {want!r}")
+        return lat, plans
 
-    # measured.  A cold round first (bulk_load + one catch-up), as every CLI
-    # invocation pays it; it is recorded but left out of the metrics, which
-    # take the median of the warm samples that follow: WARM_LOADS loads into
-    # fresh stores, then CATCHUPS successive catch-ups of K diffs on the last
-    store, cold_load = fresh_load("cold")
-    cold_catchup, _ = catch_up(store, 1, "cold")
+    # set-up: a cold round as every CLI invocation pays it -- a bulk_load
+    # into the main store the rounds catch up, one catch-up, and one pass
+    # over the read mix, whose latencies are highest while the JIT compiles
+    # each read path
+    store, cold_load = load("main")
+    cold_catchup, _ = catch_up(store, 1)
+    read(store.changesets(), READ_WARMUP)
     ctx.log(f"cold round: bulk_load {cold_load:.2f}s replicate {cold_catchup:.2f}s")
-    loads, catchups, layers = [], [], []
-    for r in range(WARM_LOADS):
-        store, t_load = fresh_load(str(r))
+    ctx.ready()
+
+    # measured: ROUNDS rounds of (bulk_load into a fresh store, catch-up of
+    # the main store, reads against the re-opened main store).  Interleaving
+    # spreads a burst of host noise over all three kinds of sample, where the
+    # medians reject it, instead of letting it cover one kind whole
+    ctx.mark_start()
+    loads, catchups, layers, lat, plans = [], [], [], [], []
+    for r in range(ROUNDS):
+        scratch, t_load = load(f"round{r}")
+        drop(scratch)
         loads.append(t_load)
-    for k in range(1, CATCHUPS + 1):
-        t_rep, layer = catch_up(store, k, str(k))
+        t_rep, layer = catch_up(store, r + 2)
         catchups.append(t_rep)
         layers.append(layer)
-    ctx.log(f"warm bulk_load {loads} replicate {catchups}")
-    # the client opens the table once and issues every query against it.
-    # Per-query latency keeps falling for the first few dozen queries as the
-    # JIT compiles the read path, so READ_WARMUP queries run (and are
-    # checked) before latencies are sampled
-    lat, plans = [], []
-    qi = 0
-    t_reads = time.perf_counter()
-    cs = store.changesets()
-    # at least MIN_QUERIES sampled, but never past 3 x --seconds on a very
-    # slow host
-    while (
-        qi < READ_WARMUP + MIN_QUERIES or time.perf_counter() - t_reads < ctx.seconds
-    ) and time.perf_counter() - t_reads < 3 * ctx.seconds:
-        kind, params = queries[qi % len(queries)]
-        qi += 1
-        res = run_query(cs, kind, params)
-        if res is not None and qi > READ_WARMUP:
-            lat.append(res[0])
-            plans.append(res[1])
+        got_lat, got_plans = read(
+            store.changesets(), -(-MIN_QUERIES // ROUNDS), ctx.seconds / ROUNDS
+        )
+        lat += got_lat
+        plans += got_plans
     ctx.mark_end()
+    ctx.log(f"warm bulk_load {loads} replicate {catchups}")
 
     # correctness of the final table (after every diff) against the model
     _set_group(ctx, "load_query:check")
@@ -386,21 +394,17 @@ def _load_query_layers(ctx, dump_path, written, catchups, plans) -> dict:
     parsed = normalize_changesets(read_changeset_xml(ctx.spark, dump_path))
     n_rows = parsed.count()
     quarantined = parsed.filter(F.col("id").isNull()).count()
-    # the warm loads are the last WARM_LOADS bulk_load spans of the window
-    bulk = statistics.median(
-        tr.durations("sinks.store.bulk_load", t0, t1)[-WARM_LOADS:]
-    )
+    # the window holds only the warm samples (the cold round is set-up)
     med = statistics.median
+    bulk = med(tr.durations("sinks.store.bulk_load", t0, t1))
     return {
         "sources.xml_source.parse_s": parse_s,
         "sources.xml_source.rows_per_s": n_rows / parse_s,
         "sources.xml_source.quarantined_rows": quarantined,
         "sources.replication.read_batch_s": med(
-            tr.durations("sources.replication.read_batch", t0, t1)[-CATCHUPS:]
+            tr.durations("sources.replication.read_batch", t0, t1)
         ),
-        "sinks.upsert.upsert_s": med(
-            tr.durations("sinks.upsert.upsert", t0, t1)[-CATCHUPS:]
-        ),
+        "sinks.upsert.upsert_s": med(tr.durations("sinks.upsert.upsert", t0, t1)),
         "sinks.upsert.partitions_rewritten": med(
             c["partitions_rewritten"] for c in catchups
         ),
@@ -450,7 +454,7 @@ def replicate(ctx) -> dict:
     base = gen.dump(BASE_CHANGESETS)
     base_path = os.path.join(work, "base.parquet")
     write_base_parquet(base_path, base, sequence=0)
-    diffs = [gen.next_diff() for _ in range(WARMUP_DIFFS + MAX_DIFFS)]
+    diffs = [gen.next_diff() for _ in range(WARMUP_DIFFS + DRAIN_DIFFS)]
     src = os.path.join(work, "src")
     os.makedirs(src)
     table_dir = os.path.join(work, "table")
@@ -479,21 +483,17 @@ def replicate(ctx) -> dict:
         ops.check(f"{group} triggers", len(prog) == n, f"{len(prog)} != {n}")
         return wall, prog
 
-    wall, prog = drain(0, WARMUP_DIFFS, "replicate:warmup")
-    per = statistics.median(p["durationMs"]["triggerExecution"] for p in prog) / 1e3
-    budget = max(1.0, ctx.seconds - 1.5)  # stream start/stop
-    d = COMPACT_EVERY * max(2, round(budget / (per * COMPACT_EVERY * 1.1)))
-    d = min(d, MAX_DIFFS)
+    drain(0, WARMUP_DIFFS, "replicate:warmup")
     ctx.ready()
 
     v_before = table.current_version()
     dirs_before = set(os.listdir(os.path.join(table_dir, "data")))
     ctx.mark_start()
-    wall, prog = drain(WARMUP_DIFFS, d, "replicate:drain")
+    wall, prog = drain(WARMUP_DIFFS, DRAIN_DIFFS, "replicate:drain")
     ctx.mark_end()
 
     model = Model(base)
-    for diff in diffs[: WARMUP_DIFFS + d]:
+    for diff in diffs:
         model.apply(diff)
     want = model.state_summary()
     _set_group(ctx, "replicate:check")
@@ -503,7 +503,7 @@ def replicate(ctx) -> dict:
 
     layer = {}
     if tr is not None:
-        layer = _replicate_layers(ctx, table, prog, d, v_before, dirs_before)
+        layer = _replicate_layers(ctx, table, prog, v_before, dirs_before)
 
     table.compact()
     table.vacuum(keep_versions=1, retention_seconds=0)
@@ -512,11 +512,11 @@ def replicate(ctx) -> dict:
 
     trig = [p["durationMs"]["triggerExecution"] / 1e3 for p in prog]
     e2e = {
-        # the diffs' changesets: the progress's numInputRows counts each
-        # scan of the micro-batch, and the MERGE scans it more than once
-        "ingest_changesets_per_s": sum(map(len, diffs[WARMUP_DIFFS : WARMUP_DIFFS + d]))
-        / wall,
-        "diff_s": wall / d,
+        # the initial import that replication starts from: the base
+        # changesets through TxnTable.overwrite (set-up, the first write of
+        # the JVM, so one cold sample)
+        "ingest_changesets_per_s": len(base) / load_s,
+        "diff_s": wall / DRAIN_DIFFS,
         "op_s_p50": _p(trig, 0.5),
         "op_s_p90": _p(trig, 0.9),
         "ops_measured": len(trig),
@@ -525,7 +525,7 @@ def replicate(ctx) -> dict:
     return {"e2e": e2e, "layer": layer}
 
 
-def _replicate_layers(ctx, table, prog, d, v_before, dirs_before) -> dict:
+def _replicate_layers(ctx, table, prog, v_before, dirs_before) -> dict:
     tr = ctx.tracer
     t0, t1 = ctx.window
     data = os.path.join(table.path, "data")
@@ -540,7 +540,7 @@ def _replicate_layers(ctx, table, prog, d, v_before, dirs_before) -> dict:
         "sinks.txn_table.merge_s_p50": _p(merges, 0.5),
         "sinks.txn_table.commits": table.current_version() - v_before,
         "sinks.txn_table.conflict_retries": tr.counts["txn_commit_lost"],
-        "sinks.txn_table.bytes_written_per_diff": written / d,
+        "sinks.txn_table.bytes_written_per_diff": written / DRAIN_DIFFS,
         "sinks.txn_table.compact_s": statistics.mean(compacts) if compacts else 0.0,
         "sinks.txn_table.live_dirs": sum(len(v) for v in live.values()),
         "streaming.trigger_s_p50": _p(trig, 0.5),
